@@ -61,8 +61,6 @@ def cmd_parse(args) -> int:
     ).cache()
     if args.table == "blocks-wide":
         out_tables = {"blocks_wide": wide_blocks_table(blocks)}
-    elif args.separate or tables is None:
-        out_tables = all_tables(blocks, tables)
     else:
         out_tables = all_tables(blocks, tables)
     counts = write_separate_datasets(out_tables, args.output, fmt=args.format)
@@ -187,7 +185,6 @@ def cmd_batch(args) -> int:
         era_range=args.range,
         tables=args.tables.split(",") if args.tables else None,
         force=args.force,
-        per_era=args.per_era,
         exclusive=args.exclusive,
     )
     print(json.dumps({str(k): v for k, v in results.items()}))
@@ -344,7 +341,9 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("input")
     sp.add_argument("table", help="all-blocks | blocks-wide | <table name>")
     sp.add_argument("output")
-    sp.add_argument("--separate", action="store_true")
+    sp.add_argument("--separate", action="store_true",
+                    help="accepted for reference-CLI parity; output is always "
+                         "one directory per table")
     sp.add_argument("--format", default="parquet",
                     choices=["parquet", "csv", "jsonl", "json"])
     sp.add_argument("--slots", default=None, metavar="LO:HI",
@@ -391,9 +390,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--tables", default=None, help="comma-separated table subset")
     sp.add_argument("--force", action="store_true")
     sp.add_argument("--network", default=None)
-    sp.add_argument("--per-era", action="store_true", dest="per_era",
-                    help="serial era-at-a-time processing (reference-shaped); "
-                         "default is one distributed job over all pending eras")
     sp.add_argument("--exclusive", action="store_true",
                     help="take the state-log lock for the run (multi-driver guard)")
     sp.set_defaults(fn=cmd_batch)

@@ -1,16 +1,16 @@
 """Sinks (SURVEY §2.A9-A14), Spark-shaped.
 
-The reference writes per-era files from in-memory lists (json/csv/parquet
+The reference writes one file per era from in-memory lists (json/csv/parquet
 exporters) and bulk-inserts to ClickHouse.  Here every sink is a
 DataFrameWriter plan:
 
 * parquet: month-partitioned (the reference's ClickHouse PARTITION BY
   toStartOfMonth(timestamp_utc)) + era_number subpartition for idempotent
-  per-era overwrite (reference's delete-then-insert, D3).
+  era-partition overwrite (reference's delete-then-insert, D3).
 * jsonl/csv: native writers; metadata travels in a sidecar file instead of
   `#` comment headers (which break parallel readers).
 * single-document JSON (A9): exact reference shape, driver-assembled —
-  documented as a per-era export (<= 8192 rows), not a big-data path.
+  documented as a single-era export (<= 8192 rows), not a big-data path.
 * ClickHouse (A14): JDBC writer config with the reference's batch size;
   gated so environments without the driver jar fail with a clear message.
 """
@@ -42,8 +42,9 @@ def write_parquet(
 ) -> None:
     """Partitioned parquet sink; Catalyst prunes partitions on read filters.
 
-    With partition_by_era + spark.sql.sources.partitionOverwriteMode=dynamic,
-    re-writing one era replaces exactly that era's partition (D3 semantics).
+    With partition_by_era the write carries a per-write dynamic
+    partitionOverwriteMode option: re-writing one era replaces exactly that
+    era's partition (D3 semantics), and the session conf stays untouched.
     """
     parts = []
     if partition_by_month and "timestamp_utc" in df.columns:
@@ -52,6 +53,8 @@ def write_parquet(
     if partition_by_era and "era_number" in df.columns:
         parts.append("era_number")
     writer = df.write.mode(mode)
+    if partition_by_era:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     if parts:
         writer = writer.partitionBy(*parts)
     writer.parquet(path)
@@ -90,10 +93,10 @@ def export_json_document(
 ) -> dict:
     """A9: single JSON document {era_info, data_type, record_count,
     export_timestamp, data: [...]} — byte-shape parity with the reference's
-    json exporter.  Driver-assembled; guarded for per-era sized exports."""
+    json exporter.  Driver-assembled; guarded for single-era sized exports."""
     rows = [json.loads(s) for s in df.limit(max_rows + 1).toJSON().collect()]
     if len(rows) > max_rows:
-        raise ValueError(f"export_json_document is a per-era export; >{max_rows} rows")
+        raise ValueError(f"export_json_document is a single-era export; >{max_rows} rows")
     doc = {
         "era_info": era_info,
         "data_type": data_type,
@@ -326,19 +329,12 @@ def compact_dataset(
             * F.element_at(bucket_map, F.col(col).cast("string"))
         ).cast("int"),
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            salted.repartition(n_out, F.col(col), F.col("__salt"))
-            .drop("__salt")
-            .write.mode("overwrite")
-            .partitionBy(col)
-            .parquet(path)
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (
+        salted.repartition(n_out, F.col(col), F.col("__salt"))
+        .drop("__salt")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
     return {k.split("=", 1)[1]: n for k, (n, _) in sorted(todo.items())}

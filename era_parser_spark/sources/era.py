@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
+import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
@@ -121,6 +122,39 @@ def _fetch_era_bytes(path: str) -> bytes:
         with urllib.request.urlopen(path, timeout=120) as resp:
             return resp.read()
     raise ValueError(f"no task-side fetch for {path!r}")
+
+
+def _era_source(
+    spark: SparkSession, paths: str | list[str], glob: str | None
+) -> DataFrame:
+    """Source rows for a task-side era kernel: `path`, plus `content` when
+    only the JVM can read the bytes.  Three shapes, chosen from the input
+    path strings (no Spark job to probe the data):
+
+    * local files -> binaryFile listing, paths only; the task opens its
+      own file so era bytes never cross the JVM->Arrow boundary
+    * http(s) URLs (A8) -> plain path rows, one per task; the kernel
+      fetches with urllib inside the task (the driver never downloads)
+    * other remote schemes (s3a/hdfs/...) -> binaryFile with content:
+      the JVM filesystem layer owns credentials/retries there
+    """
+    in_paths = [paths] if isinstance(paths, str) else list(paths)
+    if all(str(p).startswith(("http://", "https://")) for p in in_paths):
+        import fnmatch
+
+        urls = [
+            p for p in in_paths
+            if glob is None or fnmatch.fnmatch(str(p).rsplit("/", 1)[-1], glob)
+        ]
+        return spark.createDataFrame(
+            [(u,) for u in urls], T.StructType([T.StructField("path", T.StringType())])
+        ).repartition(len(urls) or 1)
+    reader = spark.read.format("binaryFile")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    binary = reader.load(paths)
+    local = all(_local_path(str(p)) is not None for p in in_paths)
+    return binary.select("path") if local else binary.select("path", "content")
 
 
 def _era_path_filter(slot_range: tuple[int, int]) -> F.Column:
@@ -407,33 +441,7 @@ def read_era_blocks(
         body_include = set()
         for t in tables:
             body_include |= TABLE_BODY_FIELDS[t]
-    # Three source shapes, chosen from the input path strings (no Spark
-    # job to probe the data):
-    #  * local files -> binaryFile listing, paths only; the task opens its
-    #    own file so era bytes never cross the JVM->Arrow boundary
-    #  * http(s) URLs (A8) -> plain path rows, one per task; the kernel
-    #    fetches with urllib inside the task (the driver never downloads)
-    #  * other remote schemes (s3a/hdfs/...) -> binaryFile with content:
-    #    the JVM filesystem layer owns credentials/retries there
-    in_paths = [paths] if isinstance(paths, str) else list(paths)
-    is_http = all(str(p).startswith(("http://", "https://")) for p in in_paths)
-    if is_http:
-        import fnmatch
-
-        urls = [
-            p for p in in_paths
-            if glob is None or fnmatch.fnmatch(str(p).rsplit("/", 1)[-1], glob)
-        ]
-        src = spark.createDataFrame(
-            [(u,) for u in urls], T.StructType([T.StructField("path", T.StringType())])
-        ).repartition(len(urls) or 1)
-    else:
-        reader = spark.read.format("binaryFile")
-        if glob:
-            reader = reader.option("pathGlobFilter", glob)
-        binary = reader.load(paths)
-        local = all(_local_path(str(p)) is not None for p in in_paths)
-        src = binary.select("path") if local else binary.select("path", "content")
+    src = _era_source(spark, paths, glob)
     if slot_range is not None:
         src = src.filter(_era_path_filter(slot_range))
     if partitions is not None:
@@ -505,51 +513,41 @@ def lookup_block(df: DataFrame, slot: int) -> DataFrame:
     return df.filter(F.col("slot") == slot)
 
 
+_VALIDATE_SCHEMA = (
+    "path string, ok boolean, n_records long, n_blocks long, bad_crc long, "
+    "bad_slot_peek long, truncated boolean, has_version_header boolean, "
+    "has_block_index boolean, index_mismatches long, min_slot long, max_slot long"
+)
+
+
+def _validate_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel of validate_era_files: one validate_era report
+    per source row.  Reads the row's `content` when the source carries it
+    (s3a/hdfs/...), else fetches the bytes task-side (local, http(s))."""
+    from era_parser_spark.parsing.e2store import validate_era
+
+    for pdf in it:
+        contents = pdf["content"] if "content" in pdf.columns else [None] * len(pdf)
+        rows = []
+        for path, content in zip(pdf["path"], contents):
+            rep = validate_era(
+                bytes(content) if content is not None else _fetch_era_bytes(str(path))
+            )
+            rep["path"] = str(path)
+            rows.append(rep)
+        yield pd.DataFrame(rows)
+
+
 def validate_era_files(
     spark: SparkSession, paths: str | list[str], glob: str | None = "*.era"
 ) -> DataFrame:
     """Distributed strict integrity check: one validate_era report per file.
 
     Same source shapes as read_era_blocks (local binaryFile listing /
-    http(s) URL rows), bytes read task-side — validating a 100 TB archive
-    is one map over the file listing.
+    http(s) URL rows / remote binaryFile content), bytes read task-side —
+    validating a 100 TB archive is one map over the file listing.
     """
-    from era_parser_spark.parsing.e2store import validate_era
     from era_parser_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    in_paths = [paths] if isinstance(paths, str) else list(paths)
-    if all(str(p).startswith(("http://", "https://")) for p in in_paths):
-        import fnmatch
-
-        urls = [
-            p for p in in_paths
-            if glob is None or fnmatch.fnmatch(str(p).rsplit("/", 1)[-1], glob)
-        ]
-        src = spark.createDataFrame(
-            [(u,) for u in urls], T.StructType([T.StructField("path", T.StringType())])
-        ).repartition(len(urls) or 1)
-    else:
-        reader = spark.read.format("binaryFile")
-        if glob:
-            reader = reader.option("pathGlobFilter", glob)
-        src = reader.load(paths).select("path")
-
-    out_schema = (
-        "path string, ok boolean, n_records long, n_blocks long, bad_crc long, "
-        "bad_slot_peek long, truncated boolean, has_version_header boolean, "
-        "has_block_index boolean, index_mismatches long, min_slot long, max_slot long"
-    )
-
-    def check(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for path in pdf["path"]:
-                rep = validate_era(_fetch_era_bytes(str(path)))
-                rep["path"] = str(path)
-                rows.append(rep)
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(check, out_schema)
+    return _era_source(spark, paths, glob).mapInPandas(_validate_batches, _VALIDATE_SCHEMA)

@@ -8,12 +8,12 @@ ReplacingMergeTree(insert_version) semantics plus an era_status latest-view
 Spark shape: an append-only parquet log of status transitions; the latest
 state is an exact window dedup (argmax insert_version per network+era).
 Appends are tiny (one row per transition) — the log is a metadata table,
-not a data table, so a single-file append per era is the right cost model
-even at 100 TB of block data.
+not a data table, so a single-file append per batch transition is the
+right cost model even at 100 TB of block data.
 
 Idempotent data writes (D3's delete-then-insert) come from dynamic
-partition overwrite on era_number: reprocessing an era atomically replaces
-exactly its own partitions.
+partition overwrite on era_number (streaming.incremental.process_eras_batch):
+reprocessing an era replaces exactly its own partitions.
 
 Concurrency contract: the log is SINGLE-DRIVER.  Appends are plain parquet
 file adds (safe to interleave — readers see a union), but `compact_log`'s
@@ -29,7 +29,6 @@ on S3, where a manifest-conditional-put service should replace it).
 from __future__ import annotations
 
 import time
-import traceback
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -128,35 +127,11 @@ class EraStateStore:
 
     # -- log primitives ------------------------------------------------------
 
-    def record(
-        self,
-        network: str,
-        era_number: int,
-        status: str,
-        total_records: int | None = None,
-        datasets: list[str] | None = None,
-        error_message: str | None = None,
-        retry_count: int = 0,
-    ) -> None:
-        self.record_many(
-            [
-                {
-                    "network": network,
-                    "era_number": era_number,
-                    "status": status,
-                    "total_records": total_records,
-                    "datasets": datasets,
-                    "error_message": error_message,
-                    "retry_count": retry_count,
-                }
-            ]
-        )
-
     def record_many(self, rows: list[dict]) -> None:
         """One append for N status transitions: one Spark job, one file.
 
-        A 100k-era batch flipping status per-era would be 100k jobs and
-        100k log files; batched it is one of each.  insert_version stays
+        A 100k-era batch flipping status one era at a time would be 100k
+        jobs and 100k log files; batched it is one of each.  insert_version stays
         strictly increasing within the batch (ns timestamp + row index)
         so the ReplacingMergeTree-style argmax dedup is deterministic.
         """
@@ -218,19 +193,9 @@ class EraStateStore:
             )
         )
 
-    def max_retry(self, network: str, era_number: int) -> int:
-        """D7: COALESCE(MAX(retry_count), 0)."""
-        row = (
-            self.log()
-            .filter((F.col("network") == network) & (F.col("era_number") == era_number))
-            .agg(F.coalesce(F.max("retry_count"), F.lit(0)).alias("m"))
-            .first()
-        )
-        return int(row["m"])
-
     def max_retries(self, network: str, eras: list[int]) -> dict[int, int]:
-        """Bulk D7: one aggregation job for a whole batch of eras
-        (max_retry per era is N jobs; this is 1)."""
+        """D7 COALESCE(MAX(retry_count), 0) for a whole batch of eras in
+        one aggregation job."""
         if not eras:
             return {}
         rows = (
@@ -339,59 +304,3 @@ class EraStateStore:
         return inv.join(
             F.broadcast(self.completed(network)), "era_number", "left_anti"
         )
-
-
-def process_era_atomic(
-    store: EraStateStore,
-    network: str,
-    era_number: int,
-    tables: dict[str, DataFrame],
-    out_base: str,
-) -> dict[str, int]:
-    """D8: processing -> write all datasets -> completed / failed.
-
-    Data writes are idempotent via dynamic partition overwrite on
-    era_number (D3): a retry after a mid-write failure replaces the same
-    partitions instead of duplicating rows — no DELETE pass needed.
-    """
-    spark = store.spark
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    retry = store.max_retry(network, era_number)
-    store.record(network, era_number, "processing", retry_count=retry + 1)
-    counts: dict[str, int] = {}
-    try:
-        from era_parser_spark.sinks.writers import write_parquet
-
-        for name, df in tables.items():
-            era_df = df.withColumn("era_number", F.lit(era_number)).cache()
-            n = era_df.count()
-            if n > 0:
-                # empty datasets are skipped (reference skips them too, A13);
-                # an all-empty write would also leave no readable schema
-                write_parquet(
-                    era_df,
-                    f"{out_base}/{name}",
-                    partition_by_month=False,
-                    partition_by_era=True,
-                    mode="overwrite",
-                )
-            era_df.unpersist()
-            counts[name] = n
-        store.record(
-            network,
-            era_number,
-            "completed",
-            total_records=sum(counts.values()),
-            datasets=sorted(counts),
-            retry_count=retry + 1,
-        )
-        return counts
-    except Exception as exc:  # noqa: BLE001 - status must record any failure
-        store.record(
-            network,
-            era_number,
-            "failed",
-            error_message=f"{type(exc).__name__}: {exc}\n{traceback.format_exc()[:2000]}",
-            retry_count=retry + 1,
-        )
-        raise

@@ -2,7 +2,8 @@
 
 run_incremental() is the reference's remote/batch lifecycle (§3.2) rebuilt
 on Spark primitives: inventory -> anti-join against the state store (D1) ->
-per-era atomic processing (D8) with partition-overwrite idempotency (D3).
+batch-atomic processing (D8) with era_number partition-overwrite
+idempotency (D3).
 Era archives are closed/past data, so the reference needs no watermarks —
 "process new files, skip done ones" is exactly this.
 
@@ -16,6 +17,7 @@ across micro-batches — something no stateless query can do.
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -26,7 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from era_parser_spark.sources.era import read_era_blocks
-from era_parser_spark.state.era_state import EraStateStore, process_era_atomic
+from era_parser_spark.state.era_state import EraStateStore
 
 
 def run_incremental(
@@ -38,19 +40,17 @@ def run_incremental(
     era_range: str | None = None,
     tables: list[str] | None = None,
     force: bool = False,
-    per_era: bool = False,
     exclusive: bool = False,
 ) -> dict[int, dict[str, int]]:
     """Process every not-yet-completed era under era_dir. Returns
     {era_number: {table: rows}} for the eras processed this run.
 
-    Default (batched): ALL pending eras go through one distributed job per
-    table — one scan parallelized across era files, one partitioned write —
-    which is the 100 TB shape (the reference loops eras serially; so does
-    per_era=True here, trading throughput for era-granular status rows).
-    Idempotency is identical either way: era_number partition overwrite +
-    status log; a mid-job failure leaves eras 'processing' and the next run
-    redoes exactly those partitions.
+    ALL pending eras go through one distributed job per table — one scan
+    parallelized across era files, one partitioned write — which is the
+    100 TB shape (the reference loops eras serially).  Idempotency comes
+    from era_number partition overwrite + the status log: a mid-job
+    failure leaves eras 'processing' or 'failed' and the next run redoes
+    exactly those partitions.
 
     `exclusive=True` wraps the whole run in the state store's best-effort
     lock (see EraStateStore.exclusive) — use it when more than one driver
@@ -60,43 +60,26 @@ def run_incremental(
     from era_parser_spark.sources.discovery import discover_auto, filter_era_range
 
     store = EraStateStore(spark, state_path)
-    if exclusive:
-        with store.exclusive(owner=f"run_incremental:{network}"):
-            return run_incremental(
-                spark, era_dir, out_base, state_path, network=network,
-                era_range=era_range, tables=tables, force=force, per_era=per_era,
-            )
-    # era_dir may be a local dir, s3://bucket/prefix, or an http(s) listing
-    # URL (the reference's --remote flow); downloads stay task-side either way
-    found = filter_era_range(discover_auto(era_dir, network), era_range)
-    if not found:
-        return {}
-    inventory = spark.createDataFrame(
-        [(e, p, network) for e, p in found], "era_number long, path string, network string"
-    )
-    pending = store.plan_pending(inventory, network, force=force)
-    todo = [(r.era_number, r.path) for r in pending.orderBy("era_number").collect()]
-    if not todo:
-        return {}
-
-    if per_era:
-        from era_parser_spark.operators.normalize import all_tables
-
-        results: dict[int, dict[str, int]] = {}
-        for era_number, path in todo:
-            blocks = read_era_blocks(spark, path, network=network, tables=tables).cache()
-            try:
-                tbls = all_tables(blocks, tables)
-                results[era_number] = process_era_atomic(
-                    store, network, era_number, tbls, out_base
-                )
-            finally:
-                blocks.unpersist()
-        return results
-
-    return process_eras_batch(
-        store, network, todo, out_base, tables=tables
-    )
+    with (
+        store.exclusive(owner=f"run_incremental:{network}")
+        if exclusive
+        else contextlib.nullcontext()
+    ):
+        # era_dir may be a local dir, s3://bucket/prefix, or an http(s)
+        # listing URL (the reference's --remote flow); downloads stay
+        # task-side either way
+        found = filter_era_range(discover_auto(era_dir, network), era_range)
+        if not found:
+            return {}
+        inventory = spark.createDataFrame(
+            [(e, p, network) for e, p in found],
+            "era_number long, path string, network string",
+        )
+        pending = store.plan_pending(inventory, network, force=force)
+        todo = [(r.era_number, r.path) for r in pending.orderBy("era_number").collect()]
+        if not todo:
+            return {}
+        return process_eras_batch(store, network, todo, out_base, tables=tables)
 
 
 def process_eras_batch(
@@ -107,8 +90,9 @@ def process_eras_batch(
     tables: list[str] | None = None,
 ) -> dict[int, dict[str, int]]:
     """One distributed job for all pending eras: scan every era file in
-    parallel, write each table once partitioned by era_number (dynamic
-    overwrite replaces exactly the touched eras), then flip all statuses.
+    parallel, write each table once partitioned by era_number (the
+    writer's dynamic partition overwrite replaces exactly the touched eras
+    and leaves the session conf alone), then flip all statuses.
     """
     from pyspark.sql import functions as F
 
@@ -116,10 +100,9 @@ def process_eras_batch(
     from era_parser_spark.sinks.writers import write_parquet
 
     spark = store.spark
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     eras = [e for e, _ in todo]
     # one retry-count aggregation + one log append for the whole batch
-    # (per-era record() would be 2N Spark jobs and N tiny files)
+    # (one status append per era would be 2N Spark jobs and N tiny files)
     retries = store.max_retries(network, eras)
     store.record_many(
         [
@@ -151,13 +134,15 @@ def process_eras_batch(
             df = TABLE_BUILDERS[name](blocks)
             # era_number rides along from the source via slot -> era math
             era_df = df.withColumn("era_number", F.expr("slot div 8192"))
-            per_era_counts = {
+            era_counts = {
                 r.era_number: r.cnt
                 for r in era_df.groupBy("era_number")
                 .agg(F.count(F.lit(1)).alias("cnt"))
                 .collect()
             }
-            if sum(per_era_counts.values()) > 0:
+            # empty datasets are skipped (the reference skips them too, A13);
+            # an all-empty write would also leave no readable schema
+            if sum(era_counts.values()) > 0:
                 write_parquet(
                     era_df,
                     f"{out_base}/{name}",
@@ -166,7 +151,7 @@ def process_eras_batch(
                     mode="overwrite",
                 )
             for era in eras:
-                counts[era][name] = int(per_era_counts.get(era, 0))
+                counts[era][name] = int(era_counts.get(era, 0))
         store.record_many(
             [
                 {"network": network, "era_number": era, "status": "completed",

@@ -372,6 +372,35 @@ def test_validate_era_files_and_corruption(spark, tmp_path):
     assert cli_main(["validate", str(d)]) == 1
 
 
+def test_validate_kernel_reads_remote_content(tmp_path):
+    """validate on s3a/hdfs paths: the source keeps binaryFile's content
+    column (no task-side fetch exists for those schemes) and the kernel
+    validates those bytes.  Driven in-process with in-memory era bytes."""
+    import pandas as pd
+
+    from era_parser_spark.sources.era import _validate_batches
+
+    f = tmp_path / era_filename("gnosis", 1500)
+    write_synthetic_era(str(f), 1500, "gnosis", blocks=8)
+    good = f.read_bytes()
+    bad = bytearray(good)
+    bad[8 + 8 + 40] ^= 0xFF  # version rec + block header + 40 into payload
+    paths = [f"s3a://era-bucket/{f.name}", "s3a://era-bucket/corrupt.era"]
+
+    out = pd.concat(_validate_batches(iter([
+        pd.DataFrame({"path": paths, "content": [good, bytes(bad)]}),
+    ])))
+    reports = {r["path"]: r for r in out.to_dict("records")}
+    ok = reports[paths[0]]
+    assert ok["ok"] and ok["n_blocks"] == 8 and ok["bad_crc"] == 0
+    assert ok["min_slot"] == 1500 * 8192
+    assert not reports[paths[1]]["ok"] and reports[paths[1]]["bad_crc"] >= 1
+
+    # without the content column the same path has no task-side fetch
+    with pytest.raises(ValueError, match="no task-side fetch"):
+        list(_validate_batches(iter([pd.DataFrame({"path": paths[:1]})])))
+
+
 def test_parse_error_counter_accumulator(spark, tmp_path):
     """on_error='skip' + error_counter: corrupt SSZ blocks count task-side
     without failing the scan (CRC intact, body undecodable)."""

@@ -43,38 +43,86 @@ def test_incremental_run_skips_completed(spark, era_dir, tmp_path_factory):
     store = EraStateStore(spark, state_path)
     summary = {r.status: r.era_count for r in store.status_summary("gnosis").collect()}
     assert summary == {"completed": 3}
-    assert store.max_retry("gnosis", 1300) == 1
+    assert store.max_retries("gnosis", [1300]) == {1300: 1}
 
     # data landed partitioned by era; re-running one era with force replaces
-    # exactly that partition (idempotent D3 overwrite), not duplicating rows.
-    # per_era=True drives the serial (reference-shaped) path over the same
-    # warehouse the batched default wrote — identical layout either way.
+    # exactly that partition (idempotent D3 overwrite), not duplicating rows
     blocks = spark.read.parquet(f"{out}/blocks")
     before = blocks.count()
     third = run_incremental(
         spark, era_dir, out, state_path, "gnosis", era_range="1301",
-        tables=["blocks", "attestations"], force=True, per_era=True,
+        tables=["blocks", "attestations"], force=True,
     )
     assert sorted(third) == [1301]
     assert spark.read.parquet(f"{out}/blocks").count() == before
-    assert store.max_retry("gnosis", 1301) == 2
+    assert store.max_retries("gnosis", [1300, 1301]) == {1300: 1, 1301: 2}
 
 
-def test_failed_status_recorded(spark, era_dir, tmp_path_factory):
-    from era_parser_spark.state.era_state import EraStateStore, process_era_atomic
+def test_run_incremental_keeps_session_overwrite_mode(spark, era_dir, tmp_path_factory):
+    """The era-partition overwrite is a per-write option: the caller's
+    session keeps its partitionOverwriteMode, a forced re-run still
+    replaces only the touched era, and a later plain overwrite in the same
+    session stays static (drops every old partition)."""
+    from era_parser_spark.streaming.incremental import run_incremental
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path_factory.mktemp("warehouse_mode"))
+        state_path = os.path.join(out, "_era_state")
+        first = run_incremental(spark, era_dir, out, state_path, "gnosis",
+                                era_range="1300-1301", tables=["blocks"])
+        assert spark.conf.get(key) == "static"
+        again = run_incremental(spark, era_dir, out, state_path, "gnosis",
+                                era_range="1301", tables=["blocks"], force=True)
+        assert spark.conf.get(key) == "static"
+        assert sorted(again) == [1301]
+        era_rows = {r.era_number: r.cnt for r in spark.read.parquet(f"{out}/blocks")
+                    .groupBy("era_number").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+        assert era_rows == {1300: first[1300]["blocks"], 1301: first[1301]["blocks"]}
+
+        later = spark.createDataFrame([(1302, 1302 * 8192)], "era_number long, slot long")
+        later.write.mode("overwrite").partitionBy("era_number").parquet(f"{out}/blocks")
+        assert [d for d in os.listdir(f"{out}/blocks")
+                if d.startswith("era_number=")] == ["era_number=1302"]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_failed_status_recorded(spark, era_dir, tmp_path_factory, monkeypatch):
+    """A failing table write marks every era of the batch failed with the
+    message and its retry count, and cleans the staging scratch; the next
+    run retries the same eras with the count incremented."""
+    import era_parser_spark.sinks.writers as writers
+    from era_parser_spark.state.era_state import EraStateStore
+    from era_parser_spark.streaming.incremental import run_incremental
 
     out = str(tmp_path_factory.mktemp("warehouse_fail"))
-    store = EraStateStore(spark, os.path.join(out, "_state"))
+    state_path = os.path.join(out, "_state")
+    store = EraStateStore(spark, state_path)
 
-    class Boom:
-        def withColumn(self, *a, **k):
-            raise RuntimeError("disk full (simulated)")
+    def failing_write(df, path, **kw):
+        raise RuntimeError("disk full (simulated)")
 
-    with pytest.raises(RuntimeError):
-        process_era_atomic(store, "gnosis", 99, {"blocks": Boom()}, out)
-    latest = store.latest_state().filter(F.col("era_number") == 99).first()
-    assert latest.status == "failed"
-    assert "disk full" in latest.error_message
+    with monkeypatch.context() as m:
+        m.setattr(writers, "write_parquet", failing_write)
+        with pytest.raises(RuntimeError, match="disk full"):
+            run_incremental(spark, era_dir, out, state_path, "gnosis", tables=["blocks"])
+    latest = {r.era_number: r for r in store.latest_state().collect()}
+    assert sorted(latest) == [1300, 1301, 1302]
+    for row in latest.values():
+        assert row.status == "failed"
+        assert row.error_message == "RuntimeError: disk full (simulated)"
+        assert row.retry_count == 1
+    assert not os.path.exists(f"{out}/_staging_blocks")
+
+    redo = run_incremental(spark, era_dir, out, state_path, "gnosis", tables=["blocks"])
+    assert sorted(redo) == [1300, 1301, 1302]
+    assert {(r.era_number, r.status, r.retry_count)
+            for r in store.latest_state().collect()} == {
+        (1300, "completed", 2), (1301, "completed", 2), (1302, "completed", 2)
+    }
 
 
 def test_sinks_shapes(spark, era_dir, tmp_path_factory):
@@ -166,7 +214,8 @@ def test_clean_failed_eras_roundtrip(spark, era_dir, tmp_path_factory):
                     era_range="1300", tables=["blocks"])
     run_incremental(spark, era_dir, out, state_path, "gnosis",
                     era_range="1301", tables=["blocks"])
-    store.record("gnosis", 1301, "failed", error_message="simulated", retry_count=1)
+    store.record_many([{"network": "gnosis", "era_number": 1301, "status": "failed",
+                        "error_message": "simulated", "retry_count": 1}])
     assert [r.era_number for r in store.failed_eras("gnosis").collect()] == [1301]
     part = f"{out}/blocks/era_number=1301"
     assert os.path.isdir(part)
@@ -194,8 +243,10 @@ def test_clean_failed_cli_and_compact(spark, era_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("warehouse_cli_clean"))
     state = os.path.join(out, "_state")
     store = EraStateStore(spark, state)
-    store.record("gnosis", 7, "failed", error_message="boom", retry_count=2)
-    store.record("gnosis", 8, "completed", total_records=10)
+    store.record_many([{"network": "gnosis", "era_number": 7, "status": "failed",
+                        "error_message": "boom", "retry_count": 2}])
+    store.record_many([{"network": "gnosis", "era_number": 8, "status": "completed",
+                        "total_records": 10}])
     assert main(["clean-failed-eras", "--state", state, "--output", out]) == 0
     assert store.failed_eras("gnosis").count() == 0
     assert store.latest_state().filter(F.col("status") == "completed").count() == 1
@@ -317,7 +368,6 @@ def test_compact_dataset_merges_small_files(spark, tmp_path_factory):
     from era_parser_spark.sinks.writers import compact_dataset
 
     out = str(tmp_path_factory.mktemp("compact_ds") / "blocks")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # 6 append batches -> 6 files in each of two era partitions
     for i in range(6):
         spark.createDataFrame(
@@ -351,7 +401,8 @@ def test_compact_dataset_sizes_files_per_partition(spark, tmp_path_factory):
     """With many partitions and a small target, each partition ends up with
     ceil(partition_bytes/target) files — NOT the global ceil(total/target)
     (the round-robin-before-partitionBy bug: every output task touches every
-    partition, multiplying files).  Also: the overwrite-mode conf is restored."""
+    partition, multiplying files).  Also: the session overwrite-mode conf is
+    left as the caller set it."""
     import glob as _g
     import math
     import os
@@ -359,7 +410,6 @@ def test_compact_dataset_sizes_files_per_partition(spark, tmp_path_factory):
     from era_parser_spark.sinks.writers import compact_dataset
 
     out = str(tmp_path_factory.mktemp("compact_sz") / "events")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     rng_payloads = ["".join(chr(97 + (i * 7 + k) % 26) for k in range(400)) for i in range(60)]
     for i in range(6):  # 6 append batches x 8 partitions
         spark.createDataFrame(
@@ -396,7 +446,6 @@ def test_compact_dataset_sizes_files_per_partition(spark, tmp_path_factory):
         )
     after = sorted((r.era, r.seq) for r in spark.read.parquet(out).collect())
     assert after == rows_before
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 
 def test_digest_dedup_state_across_microbatches(spark, tmp_path_factory):
@@ -627,72 +676,15 @@ def chaos_era_dir(tmp_path_factory):
     return str(d)
 
 
-def test_mid_write_kill_recovery_per_era(spark, chaos_era_dir, tmp_path_factory, monkeypatch):
-    """Chaos pin (round-7 verdict item 6): a hard kill mid-era-write — the
-    sink lands a PARTIAL partition and the process dies before any
-    failed-status record can be written (BaseException, so
-    process_era_atomic's except-Exception never runs) — leaves the era
-    'processing'.  The restarted run must re-process exactly that era,
-    dynamic partition overwrite must replace the partial partition (no
-    duplicate and no missing rows), and log compaction must preserve the
-    recovered state."""
-    import era_parser_spark.sinks.writers as writers
-    from era_parser_spark.state.era_state import EraStateStore
-    from era_parser_spark.streaming.incremental import run_incremental
-
-    out = str(tmp_path_factory.mktemp("warehouse_chaos"))
-    state_path = os.path.join(out, "_era_state")
-    real_write = writers.write_parquet
-    calls = {"n": 0}
-
-    def killing_write(df, path, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            real_write(df.limit(3), path, **kw)  # partial data really lands
-            raise KeyboardInterrupt("simulated mid-write kill")
-        return real_write(df, path, **kw)
-
-    monkeypatch.setattr(writers, "write_parquet", killing_write)
-    with pytest.raises(KeyboardInterrupt):
-        run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
-                        tables=["blocks"], per_era=True)
-
-    store = EraStateStore(spark, state_path)
-    latest = store.latest_state().filter(F.col("era_number") == 1400).first()
-    assert latest.status == "processing"  # kill == no failed record
-    assert spark.read.parquet(f"{out}/blocks").count() == 3  # the partial
-
-    # restart: both eras pend (processing is not completed), each processed
-    # exactly once, and the partial partition is REPLACED, not appended to
-    second = run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
-                             tables=["blocks"], per_era=True)
-    assert sorted(second) == [1400, 1401]
-    blocks = spark.read.parquet(f"{out}/blocks")
-    per_era = {r.era_number: r.cnt for r in blocks.groupBy("era_number")
-               .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert per_era == {1400: second[1400]["blocks"], 1401: second[1401]["blocks"]}
-    # the partial (3-row) partition was REPLACED by the full era
-    assert per_era[1400] > 3
-    assert blocks.select("slot").distinct().count() == blocks.count()
-    assert store.max_retry("gnosis", 1400) == 2  # killed attempt counted
-
-    # third run: a no-op; then the log compacts without changing state
-    assert run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
-                           tables=["blocks"], per_era=True) == {}
-    before = sorted(
-        (r.era_number, r.status) for r in store.latest_state().collect()
-    )
-    store.compact_log()
-    after_store = EraStateStore(spark, state_path)
-    assert sorted(
-        (r.era_number, r.status) for r in after_store.latest_state().collect()
-    ) == before == [(1400, "completed"), (1401, "completed")]
-
-
 def test_mid_write_kill_recovery_batched(spark, chaos_era_dir, tmp_path_factory, monkeypatch):
-    """Same chaos on the batched (100 TB-shaped) path: the kill lands a
-    partial multi-era partition set; the whole batch stays 'processing'
-    and the restarted batch rewrites every touched partition exactly."""
+    """Chaos pin: a hard kill mid-write — the sink lands a PARTIAL
+    multi-era partition set and the process dies before any failed-status
+    record can be written (BaseException, so the batch's except-Exception
+    never runs) — leaves the whole batch 'processing'.  The restarted run
+    must re-process exactly those eras (the killed attempt counted in
+    retries), dynamic partition overwrite must replace the partial
+    partitions (no duplicate and no missing rows), a third run is a no-op,
+    and log compaction must preserve the recovered state."""
     import era_parser_spark.sinks.writers as writers
 
     from era_parser_spark.state.era_state import EraStateStore
@@ -718,6 +710,7 @@ def test_mid_write_kill_recovery_batched(spark, chaos_era_dir, tmp_path_factory,
     store = EraStateStore(spark, state_path)
     statuses = {r.era_number: r.status for r in store.latest_state().collect()}
     assert statuses == {1400: "processing", 1401: "processing"}
+    assert spark.read.parquet(f"{out}/blocks").count() == 5  # the partial
     # staging scratch must not leak past the failed batch (finally-cleanup)
     assert not os.path.exists(f"{out}/_staging_blocks")
 
@@ -728,6 +721,22 @@ def test_mid_write_kill_recovery_batched(spark, chaos_era_dir, tmp_path_factory,
     total = second[1400]["blocks"] + second[1401]["blocks"]
     assert blocks.count() == total > 5  # partial partitions replaced
     assert blocks.select("slot").distinct().count() == total
+    era_rows = {r.era_number: r.cnt for r in blocks.groupBy("era_number")
+                .agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    assert era_rows == {1400: second[1400]["blocks"], 1401: second[1401]["blocks"]}
     assert {r.era_number: r.status for r in store.latest_state().collect()} == {
         1400: "completed", 1401: "completed"
     }
+    assert store.max_retries("gnosis", [1400, 1401]) == {1400: 2, 1401: 2}
+
+    # third run: a no-op; then the log compacts without changing state
+    assert run_incremental(spark, chaos_era_dir, out, state_path, "gnosis",
+                           tables=["blocks"]) == {}
+    before = sorted(
+        (r.era_number, r.status, r.retry_count) for r in store.latest_state().collect()
+    )
+    store.compact_log()
+    assert sorted(
+        (r.era_number, r.status, r.retry_count)
+        for r in EraStateStore(spark, state_path).latest_state().collect()
+    ) == before == [(1400, "completed", 2), (1401, "completed", 2)]
