@@ -39,7 +39,7 @@ def _resolve_input(path: str, network: str | None):
 
 def cmd_parse(args) -> int:
     from era_parser_spark.operators.normalize import TABLE_BUILDERS, all_tables, wide_blocks_table
-    from era_parser_spark.sinks.writers import write_separate_datasets
+    from era_parser_spark.sinks.writers import staged_parquet, write_separate_datasets
     from era_parser_spark.sources.era import read_era_blocks
 
     spark = _spark()
@@ -55,15 +55,17 @@ def cmd_parse(args) -> int:
     if args.slots:
         lo, _, hi = args.slots.partition(":")
         slot_range = (int(lo), int(hi or lo))
-    blocks = read_era_blocks(
+    scan = read_era_blocks(
         spark, args.input, network=args.network, glob=args.glob, tables=tables,
         slot_range=slot_range,
-    ).cache()
-    if args.table == "blocks-wide":
-        out_tables = {"blocks_wide": wide_blocks_table(blocks)}
-    else:
-        out_tables = all_tables(blocks, tables)
-    counts = write_separate_datasets(out_tables, args.output, fmt=args.format)
+    )
+    # staged, not cached: every table build reads the decoded blocks back
+    with staged_parquet(scan, f"{args.output}/_staging_blocks") as blocks:
+        if args.table == "blocks-wide":
+            out_tables = {"blocks_wide": wide_blocks_table(blocks)}
+        else:
+            out_tables = all_tables(blocks, tables)
+        counts = write_separate_datasets(out_tables, args.output, fmt=args.format)
     print(json.dumps({"written": counts, "output": args.output}))
     return 0
 
@@ -123,17 +125,13 @@ def cmd_slice(args) -> int:
     pushdown read (non-matching blocks never decompressed), re-encoded
     with a fresh block index.  Pure-kernel path like `block` — works on
     local paths and http(s)."""
-    from era_parser_spark.parsing import snappy as _snappy
-    from era_parser_spark.parsing.e2store import iter_block_payloads, write_era
+    from era_parser_spark.parsing.e2store import iter_blocks, write_era
     from era_parser_spark.sources.era import _fetch_era_bytes
 
     lo, _, hi = args.slots.partition(":")
     lo, hi = int(lo), int(hi or lo)
     data = _fetch_era_bytes(args.input)
-    payloads = [
-        _snappy.decompress(comp)
-        for _slot, comp in iter_block_payloads(data, slot_range=(lo, hi))
-    ]
+    payloads = [raw for _, _, raw in iter_blocks(data, slot_range=(lo, hi))]
     if not payloads:
         print(f"no blocks in slot range {lo}:{hi}", file=sys.stderr)
         return 1
@@ -148,25 +146,25 @@ def cmd_slice(args) -> int:
 def cmd_block(args) -> int:
     from era_parser_spark.config.networks import detect_network, fork_at_slot
     from era_parser_spark.parsing.beacon import parse_block, stringify
-    from era_parser_spark.parsing.e2store import iter_block_payloads
+    from era_parser_spark.parsing.e2store import iter_blocks
     from era_parser_spark.sources.era import _fetch_era_bytes
 
     # point lookup: pure-kernel path, no Spark session needed (§3.3);
     # slot_range engages the SlotIndex so only the one matching record is
-    # sliced (nothing else decompressed); works on local paths and http(s)
+    # decompressed; works on local paths and http(s)
     network = args.network or detect_network(args.input)
     data = _fetch_era_bytes(args.input)
-    for slot, payload in iter_block_payloads(data, slot_range=(args.slot, args.slot)):
-        if slot == args.slot:
-            doc = parse_block(payload, network)
-            printable = {
-                "data": stringify(doc["data"]),
-                "version": doc["version"],
-                "timestamp_utc": doc["timestamp_utc"],
-                "metadata": doc["metadata"],
-            }
-            print(json.dumps(printable, indent=2))
-            return 0
+    for _, comp_size, raw in iter_blocks(data, slot_range=(args.slot, args.slot)):
+        doc = parse_block(raw, network, is_compressed=False)
+        doc["metadata"]["compressed_size"] = comp_size
+        printable = {
+            "data": stringify(doc["data"]),
+            "version": doc["version"],
+            "timestamp_utc": doc["timestamp_utc"],
+            "metadata": doc["metadata"],
+        }
+        print(json.dumps(printable, indent=2))
+        return 0
     print(f"slot {args.slot} not found (fork would be "
           f"{fork_at_slot(args.slot, network)})", file=sys.stderr)
     return 1

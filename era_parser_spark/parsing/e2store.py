@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from era_parser_spark.parsing import snappy
 from era_parser_spark.parsing.beacon import peek_slot
@@ -128,44 +128,71 @@ def iter_records(data: bytes) -> Iterator[EraRecord]:
         pos += _HEADER.size + length
 
 
-def iter_block_payloads(
-    data: bytes, slot_range: tuple[int, int] | None = None
-) -> Iterator[tuple[int, bytes]]:
-    """(slot, compressed_payload) for each block record, file order.
+def _block_payloads(
+    data: bytes, slot_range: tuple[int, int] | None
+) -> Iterator[tuple[int | None, bytes]]:
+    """(indexed slot or None, compressed payload) per candidate block record.
 
-    With `slot_range=(lo, hi)` (inclusive) the SlotIndex — which the
-    reference writes off as unused (docs/ERA_FILE_FORMAT.md:38: "not
-    currently used") — becomes a pushdown: only the matching records are
-    sliced and NOTHING ELSE is even snappy-decompressed, because the slot
-    comes from the index instead of peek_slot.  Files without a readable
-    index fall back to the full scan + filter.
-    """
+    With `slot_range` and a readable block index only the matching records
+    are sliced and the slot comes from the index; otherwise every block
+    record is yielded with slot None (the caller peeks it)."""
     if slot_range is not None:
         idx = find_block_index(data)
         if idx is not None:
             lo, hi = slot_range
             for slot, off in idx.entries():
                 if lo <= slot <= hi:
-                    rtype, length, _ = _HEADER.unpack_from(data, off)
-                    if rtype == TYPE_COMPRESSED_BLOCK:
-                        yield slot, data[off + _HEADER.size : off + _HEADER.size + length]
+                    _, length, _ = _HEADER.unpack_from(data, off)
+                    yield slot, data[off + _HEADER.size : off + _HEADER.size + length]
             return
     for rec in iter_records(data):
         if rec.record_type == TYPE_COMPRESSED_BLOCK:
-            slot = peek_slot(snappy.decompress(rec.payload))
-            if slot_range is None or slot_range[0] <= slot <= slot_range[1]:
-                yield slot, rec.payload
+            yield None, rec.payload
 
 
-def iter_blocks_decompressed(data: bytes) -> Iterator[tuple[int, int, bytes]]:
-    """(slot, compressed_size, raw_ssz) per block record, decompressing each
-    payload exactly once (the scan kernel's iterator — iter_block_payloads
-    would decompress for the slot peek and hand back compressed bytes the
-    parser decompresses again)."""
-    for rec in iter_records(data):
-        if rec.record_type == TYPE_COMPRESSED_BLOCK:
-            raw = snappy.decompress(rec.payload)
-            yield peek_slot(raw), len(rec.payload), raw
+def iter_blocks(
+    data: bytes,
+    slot_range: tuple[int, int] | None = None,
+    on_bad: Callable[[Exception], None] | None = None,
+) -> Iterator[tuple[int, int, bytes]]:
+    """(slot, compressed_size, raw_ssz) per block record, file order; each
+    payload is snappy-decompressed at most once.
+
+    With `slot_range=(lo, hi)` (inclusive) the SlotIndex — which the
+    reference writes off as unused (docs/ERA_FILE_FORMAT.md:38: "not
+    currently used") — becomes a pushdown: only the matching records are
+    decompressed.  Files without a readable index are walked record by
+    record, each block decompressed once, its slot peeked, then filtered.
+
+    `on_bad(exc)` receives per-record failures (snappy, slot peek) and
+    iteration continues with the next record; a failing record stream
+    (truncated file) goes to `on_bad` too and ends the file there.  With
+    `on_bad=None` every failure raises.
+    """
+    records = _block_payloads(data, slot_range)
+    while True:
+        # a generator that raised is finished, so the record walk is driven
+        # by hand: its failure ends the file, a record's failure does not
+        try:
+            slot, comp = next(records)
+        except StopIteration:
+            return
+        except Exception as exc:  # noqa: BLE001
+            if on_bad is None:
+                raise
+            on_bad(exc)
+            return
+        try:
+            raw = snappy.decompress(comp)
+            if slot is None:
+                slot = peek_slot(raw)
+        except Exception as exc:  # noqa: BLE001
+            if on_bad is None:
+                raise
+            on_bad(exc)
+            continue
+        if slot_range is None or slot_range[0] <= slot <= slot_range[1]:
+            yield slot, len(comp), raw
 
 
 def era_stats(data: bytes) -> dict:
@@ -185,11 +212,7 @@ def era_stats(data: bytes) -> dict:
         known = set(block_offsets)
         slots = [s for s, off in idx.entries() if off in known]
     else:
-        slots = [
-            peek_slot(snappy.decompress(rec.payload))
-            for rec in iter_records(data)
-            if rec.record_type == TYPE_COMPRESSED_BLOCK
-        ]
+        slots = [slot for slot, _, _ in iter_blocks(data)]
     return {
         "record_counts": counts,
         "block_count": len(block_offsets),

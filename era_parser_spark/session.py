@@ -49,3 +49,10 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for `path` through the JVM's Hadoop layer — the
+    same driver-side metadata calls on file://, hdfs:// and s3a://."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p

@@ -11,18 +11,22 @@ DataFrameWriter plan:
   `#` comment headers (which break parallel readers).
 * single-document JSON (A9): exact reference shape, driver-assembled —
   documented as a single-era export (<= 8192 rows), not a big-data path.
-* ClickHouse (A14): JDBC writer config with the reference's batch size;
-  gated so environments without the driver jar fail with a clear message.
+* ClickHouse (A14): write_clickhouse streams partitions through an
+  injectable client (default sinks/clickhouse_http.ClickHouseHttpClient)
+  in the reference's 100k-row batches with retry/reconnect.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from era_parser_spark.session import hadoop_fs
 
 MONTH_COL = "month"
 CLICKHOUSE_BATCH = 100_000  # reference clickhouse_service.py:17
@@ -108,6 +112,31 @@ def export_json_document(
     with open(out_file, "w") as f:
         json.dump(doc, f, indent=2)
     return doc
+
+
+@contextlib.contextmanager
+def staged_parquet(df: DataFrame, path: str):
+    """Write `df` once to the scratch parquet dir `path` and yield it read
+    back; the directory is deleted on exit, success or failure.
+
+    Use this instead of cache() for a frame several plans read: each reader
+    then runs a column-pruned scan with bounded memory.  A cached batch-
+    scale decoded-blocks frame holds (or spills fragment by fragment) the
+    whole batch in the block manager while every reader fights it for
+    execution memory — at 512 eras x 4096 blocks on a 16g local JVM that
+    GC-death-spiralled (tools/rehearsal.py, docs/PLANS.md).  The write is
+    the same volume a cache would have spilled.
+    """
+    spark = df.sparkSession
+    try:
+        df.write.mode("overwrite").parquet(path)
+        yield spark.read.parquet(path)
+    finally:
+        try:
+            fs, p = hadoop_fs(spark, path)
+            fs.delete(p, True)
+        except Exception:  # noqa: BLE001 - cleanup must never mask the result
+            pass
 
 
 def write_separate_datasets(
@@ -210,31 +239,6 @@ def write_clickhouse(
     df.foreachPartition(_load)
 
 
-def clickhouse_writer(
-    df: DataFrame,
-    url: str,
-    table: str,
-    user: str = "default",
-    password: str = "",
-    batchsize: int = CLICKHOUSE_BATCH,
-):
-    """A14: ClickHouse via JDBC (needs the clickhouse-jdbc jar on the
-    classpath).  Returns the configured writer; .save() executes.  The
-    reference's retry/backoff (clickhouse_service.py:139-162) maps to Spark
-    task retries; its 100k insert batching maps to `batchsize`."""
-    return (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("user", user)
-        .option("password", password)
-        .option("driver", "com.clickhouse.jdbc.ClickHouseDriver")
-        .option("batchsize", str(batchsize))
-        .option("isolationLevel", "NONE")
-        .mode("append")
-    )
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,
@@ -285,10 +289,7 @@ def compact_dataset(
     """
     import math
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
+    fs, base = hadoop_fs(spark, path)
     if not fs.exists(base):
         return {}
     todo: dict[str, tuple[int, int]] = {}  # partition dir -> (n_files, bytes)

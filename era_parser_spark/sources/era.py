@@ -10,9 +10,8 @@ Pipeline (reference lifecycle §3.1, rebuilt Spark-shaped):
 Scale model: one era file (= 8192 slots, hundreds of MB) is one task; a
 100 TB archive is ~hundreds of thousands of files, so parallelism scales
 with the file count and no stage shuffles raw payloads.  Column pruning is
-pushed into the SSZ layer via `tables=`/`body_include=` — the scan only
-decodes the body fields the requested tables need (the reference always
-decodes everything).
+pushed into the SSZ layer via `tables=` — the scan only decodes the body
+fields the requested tables need (the reference always decodes everything).
 
 The Spark schema is GENERATED from the SSZ schema (one source of truth);
 the Arrow schema the kernel emits is derived from the Spark schema with
@@ -21,7 +20,7 @@ pyspark's own converter, so the two can never drift.
 
 from __future__ import annotations
 
-import os
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
@@ -40,8 +39,8 @@ from era_parser_spark.config.networks import (
 )
 from era_parser_spark.parsing import arrow_direct as _arrow_direct
 from era_parser_spark.parsing import ssz
-from era_parser_spark.parsing.beacon import BODY_SCHEMAS, block_schema
-from era_parser_spark.parsing.beacon import parse_block
+from era_parser_spark.parsing.beacon import BODY_SCHEMAS, block_schema, decode_signed_block
+from era_parser_spark.parsing.e2store import iter_blocks
 
 # body fields each normalized table needs (drives pruned decode)
 TABLE_BODY_FIELDS: dict[str, set[str]] = {
@@ -168,11 +167,37 @@ def _era_path_filter(slot_range: tuple[int, int]) -> F.Column:
     return F.coalesce(keep, F.lit(True))
 
 
+_BATCH_ROWS = 2048  # rows per output batch; 512/2048/8192 within 5% (docs/PLANS.md)
+
+
+class _DictBlockCollector:
+    """Dict-IR twin of arrow_direct.ColumnarBlockCollector (same append /
+    flush interface): full and non-columnar pruned decodes go through the
+    per-block document and one pa.array conversion per batch.
+
+    `append` returns the execution-payload timestamp when the payload was
+    decoded (the columnar collector never decodes it and returns None)."""
+
+    def __init__(self, block_type: pa.DataType, body_include: set[str] | None):
+        self.block_type = block_type
+        self.body_include = body_include
+        self.docs: list[dict] = []
+
+    def append(self, raw: bytes, fork: str) -> int | None:
+        doc = decode_signed_block(raw, fork, body_include=self.body_include)
+        self.docs.append(doc)
+        payload = doc["message"]["body"].get("execution_payload")
+        return int(payload.get("timestamp", 0)) if payload else None
+
+    def flush(self) -> pa.Array:
+        docs, self.docs = self.docs, []
+        return pa.array(docs, type=self.block_type)
+
+
 def _parser(
     network: str | None,
     body_include: set[str] | None,
     on_error: str = "skip",
-    batch_rows: int = 2048,
     slot_range: tuple[int, int] | None = None,
     error_counter=None,
     arrow_direct: bool = True,
@@ -190,14 +215,17 @@ def _parser(
     per-column lists (2.0-2.9x on the decode step; the dict IR's PyObject
     churn is the measured DRAM ceiling, docs/PLANS.md).  `arrow_direct=
     False` forces the dict IR (debug/differential path).
+
+    Block records come from e2store.iter_blocks (one decompression per
+    record, SlotIndex pushdown for `slot_range`); one `skip` policy covers
+    record errors and decode errors alike.
     """
     out_schema = _PARSE_OUT_ARROW
     block_type = out_schema.field("block").type
-    use_columnar = arrow_direct and _arrow_direct.supports(body_include)
+    columnar = arrow_direct and _arrow_direct.supports(body_include)
 
     def parse(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import gc
-        import sys
 
         # The kernel allocates millions of small dicts/lists per era file;
         # cyclic GC scans that live graph repeatedly and costs ~2-4x
@@ -207,35 +235,42 @@ def _parser(
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
-            yield from _parse_batches(it, sys.stderr)
+            yield from _parse_batches(it)
         finally:
             if gc_was_enabled:
                 gc.enable()
 
-    def _parse_batches(it: Iterator[pa.RecordBatch], stderr) -> Iterator[pa.RecordBatch]:
-        import sys
-
-        scalars: list[tuple] = []  # per-block metadata columns
-        blocks: list[dict] = []  # parsed block documents (dict-IR path)
+    def _parse_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         collector = (
             _arrow_direct.ColumnarBlockCollector(block_type, set(body_include))
-            if use_columnar
-            else None
+            if columnar
+            else _DictBlockCollector(block_type, body_include)
         )
+        scalars: list[tuple] = []  # per-block metadata columns
 
         def flush() -> pa.RecordBatch:
-            nonlocal scalars, blocks
+            nonlocal scalars
             cols = list(zip(*scalars))
-            block_arr = (
-                collector.flush()
-                if collector is not None
-                else pa.array(blocks, type=block_type)
-            )
             arrays = [
                 pa.array(cols[i], type=out_schema.field(i).type) for i in range(8)
-            ] + [block_arr]
-            scalars, blocks = [], []
+            ] + [collector.flush()]
+            scalars = []
             return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+
+        def skip(exc: Exception, slot: int | None = None) -> None:
+            # per-record error isolation (the reference defaults bad fields
+            # rather than failing the era); one corrupt block — or a
+            # truncated file's tail — must not kill a 100 TB job
+            if on_error == "fail":
+                raise exc
+            if error_counter is not None:
+                error_counter.add(1)
+            where = "block record" if slot is None else f"slot {slot}"
+            print(
+                f"era_parser_spark: skipping {where} in {path}: "
+                f"{type(exc).__name__}: {exc}",
+                file=sys.stderr,
+            )
 
         for rb in it:
             names = rb.schema.names
@@ -243,106 +278,20 @@ def _parser(
             content_col = rb.column(names.index("content")) if "content" in names else None
             for i in range(rb.num_rows):
                 path = paths[i].as_py()
-                if content_col is not None:
-                    content = content_col[i].as_py()
-                else:
-                    # paths-only mode: the task reads its own bytes (local
-                    # open or task-side HTTP fetch), so era bytes never
-                    # ride through the JVM->Arrow boundary (one era file
-                    # can be hundreds of MB)
-                    content = _fetch_era_bytes(path)
+                # paths-only mode: the task reads its own bytes (local open
+                # or task-side HTTP fetch), so era bytes never ride through
+                # the JVM->Arrow boundary (one era file can be hundreds of MB)
+                content = (
+                    content_col[i].as_py() if content_col is not None
+                    else _fetch_era_bytes(path)
+                )
                 net = network or detect_network(path)
                 meta = parse_era_filename(path)
-                n_bad = 0
-                from era_parser_spark.parsing import snappy as _snappy
-                from era_parser_spark.parsing.beacon import peek_slot as _peek
-                from era_parser_spark.parsing.e2store import (
-                    TYPE_COMPRESSED_BLOCK as _TBLK,
-                    iter_block_payloads,
-                    iter_records,
-                )
-
-                # per-RECORD error isolation, not just per-parse: a payload
-                # that fails snappy or is too short for the slot peek must
-                # skip like any other bad block, and the iteration must
-                # survive it (a generator that raises is dead, so the
-                # try sits inside the loop, around decompress+peek)
-                def robust_blocks():
-                    nonlocal n_bad
-                    if slot_range is None:
-                        source = (
-                            (None, rec.payload)
-                            for rec in iter_records(content)
-                            if rec.record_type == _TBLK
-                        )
-                    else:
-                        # SlotIndex pushdown (A3): only matching records are
-                        # sliced; nothing else is even snappy-decompressed
-                        source = iter_block_payloads(content, slot_range=slot_range)
-                    # The record iterator itself can raise mid-file on a
-                    # truncated era (partial download — the most common real
-                    # corruption), which a `for` loop would let escape and
-                    # kill the task.  Drive it manually: truncation yields
-                    # the blocks parsed so far, then skips the file's
-                    # remainder under on_error='skip'.
-                    src_it = iter(source)
-                    while True:
-                        try:
-                            known_slot, comp = next(src_it)
-                        except StopIteration:
-                            break
-                        except Exception as exc:  # noqa: BLE001
-                            if on_error == "fail":
-                                raise
-                            n_bad += 1
-                            if error_counter is not None:
-                                error_counter.add(1)
-                            print(
-                                f"era_parser_spark: truncated/corrupt era "
-                                f"record stream in {path}, skipping rest of "
-                                f"file: {type(exc).__name__}: {exc}",
-                                file=sys.stderr,
-                            )
-                            break
-                        try:
-                            raw = _snappy.decompress(comp)
-                            yield (
-                                known_slot if known_slot is not None else _peek(raw),
-                                len(comp),
-                                raw,
-                            )
-                        except Exception as exc:  # noqa: BLE001
-                            if on_error == "fail":
-                                raise
-                            n_bad += 1
-                            if error_counter is not None:
-                                error_counter.add(1)
-                            print(
-                                f"era_parser_spark: skipping undecodable block "
-                                f"record in {path}: {type(exc).__name__}: {exc}",
-                                file=sys.stderr,
-                            )
-
-                for slot, comp_size, raw in robust_blocks():
+                for slot, comp_size, raw in iter_blocks(content, slot_range, on_bad=skip):
                     try:
-                        if collector is not None:
-                            # columnar fast path: pruned fields decode
-                            # straight into flat column lists; version and
-                            # timestamp come from the same slot math the
-                            # pruned dict path falls back to (payload is
-                            # never decoded here)
-                            version = fork_at_slot(slot, net)
-                            collector.append(raw, version)
-                            ts = slot_timestamp(slot, net)
-                            decomp = len(raw)
-                        else:
-                            parsed = parse_block(
-                                raw, net, is_compressed=False,
-                                body_include=body_include,
-                            )
-                            version = parsed["version"]
-                            ts = parsed["timestamp_utc"]
-                            decomp = parsed["metadata"]["decompressed_size"]
+                        version = fork_at_slot(slot, net)
+                        slot_ts = slot_timestamp(slot, net)
+                        payload_ts = collector.append(raw, version)
                     except _arrow_direct.UnsupportedForkError:
                         # a fork the columnar decoder doesn't know is NOT a
                         # corrupt block — skipping would silently drop every
@@ -350,19 +299,7 @@ def _parser(
                         # points at arrow_direct=False)
                         raise
                     except Exception as exc:  # noqa: BLE001
-                        # per-block error isolation (the reference defaults
-                        # bad fields rather than failing the era); one
-                        # corrupt block must not kill a 100 TB job
-                        if on_error == "fail":
-                            raise
-                        n_bad += 1
-                        if error_counter is not None:
-                            error_counter.add(1)
-                        print(
-                            f"era_parser_spark: skipping slot {slot} in {path}: "
-                            f"{type(exc).__name__}: {exc}",
-                            file=sys.stderr,
-                        )
+                        skip(exc, slot)
                         continue
                     scalars.append(
                         (
@@ -371,20 +308,13 @@ def _parser(
                             meta["era_number"] if meta else slot // 8192,
                             slot,
                             version,
-                            ts,
+                            payload_ts or slot_ts,
                             comp_size,
-                            decomp,
+                            len(raw),
                         )
                     )
-                    if collector is None:
-                        blocks.append(parsed["data"])
-                    if len(scalars) >= batch_rows:
+                    if len(scalars) >= _BATCH_ROWS:
                         yield flush()
-                if n_bad:
-                    print(
-                        f"era_parser_spark: {n_bad} unparseable block(s) skipped in {path}",
-                        file=sys.stderr,
-                    )
         if scalars:
             yield flush()
 
@@ -404,13 +334,11 @@ def read_era_blocks(
     paths: str | list[str],
     network: str | None = None,
     tables: list[str] | None = None,
-    body_include: set[str] | None = None,
     glob: str | None = None,
     on_error: str = "skip",
     slot_range: tuple[int, int] | None = None,
     partitions: int | None = None,
     error_counter=None,
-    batch_rows: int = 2048,
     arrow_direct: bool = True,
 ) -> DataFrame:
     """Era files -> blocks DataFrame (typed, fork-superset body struct).
@@ -437,19 +365,17 @@ def read_era_blocks(
     from era_parser_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    if tables is not None and body_include is None:
-        body_include = set()
-        for t in tables:
-            body_include |= TABLE_BODY_FIELDS[t]
+    body_include = None
+    if tables is not None:
+        body_include = set().union(*(TABLE_BODY_FIELDS[t] for t in tables))
     src = _era_source(spark, paths, glob)
     if slot_range is not None:
         src = src.filter(_era_path_filter(slot_range))
     if partitions is not None:
         src = src.repartition(partitions)
     parsed = src.mapInArrow(
-        _parser(network, body_include, on_error, batch_rows=batch_rows,
-                slot_range=slot_range, error_counter=error_counter,
-                arrow_direct=arrow_direct),
+        _parser(network, body_include, on_error, slot_range=slot_range,
+                error_counter=error_counter, arrow_direct=arrow_direct),
         _PARSE_OUT_SCHEMA,
     )
     block = F.col("block")

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from era_parser_spark.queries.registry import table
+from era_parser_spark.session import hadoop_fs
 
 SYNTH_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -27,10 +28,7 @@ def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> list[st
     Listing goes through the Hadoop FileSystem API so the same call works
     on file://, hdfs:// and s3a:// warehouses (driver-side metadata op).
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(warehouse_dir)
-    fs = base.getFileSystem(conf)
+    fs, base = hadoop_fs(spark, warehouse_dir)
     if not fs.exists(base):
         return []
     names = sorted(

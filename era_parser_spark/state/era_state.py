@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from era_parser_spark.session import hadoop_fs
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("network", T.StringType(), False),
@@ -61,12 +63,6 @@ class EraStateStore:
 
     # -- multi-driver guard (see module docstring: single-driver contract) ---
 
-    def _fs_and_path(self, p: str):
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        hp = jvm.org.apache.hadoop.fs.Path(p)
-        return hp.getFileSystem(conf), hp, jvm
-
     @property
     def _lock_path(self) -> str:
         return self.path.rstrip("/") + ".__lock__"
@@ -79,7 +75,7 @@ class EraStateStore:
         there).  A lock older than `stale_after_s` is presumed abandoned
         (crashed driver) and broken.  Raises StateLockHeld when live.
         """
-        fs, hp, jvm = self._fs_and_path(self._lock_path)
+        fs, hp = hadoop_fs(self.spark, self._lock_path)
         if fs.exists(hp):
             age = time.time() - fs.getFileStatus(hp).getModificationTime() / 1000.0
             if age < stale_after_s:
@@ -108,7 +104,7 @@ class EraStateStore:
             out.close()
 
     def release_lock(self) -> None:
-        fs, hp, _ = self._fs_and_path(self._lock_path)
+        fs, hp = hadoop_fs(self.spark, self._lock_path)
         fs.delete(hp, False)
 
     def exclusive(self, owner: str = "driver", stale_after_s: float = 3600.0):
@@ -245,10 +241,7 @@ class EraStateStore:
         if not failed:
             return []
         if out_base is not None:
-            jvm = self.spark._jvm
-            conf = self.spark._jsc.hadoopConfiguration()
-            base = jvm.org.apache.hadoop.fs.Path(out_base)
-            fs = base.getFileSystem(conf)
+            fs, base = hadoop_fs(self.spark, out_base)
             if datasets is None:
                 datasets = (
                     [st.getPath().getName() for st in fs.listStatus(base) if st.isDirectory()]
@@ -257,8 +250,8 @@ class EraStateStore:
                 )
             for name in datasets:
                 for era in failed:
-                    part = jvm.org.apache.hadoop.fs.Path(
-                        f"{out_base.rstrip('/')}/{name}/era_number={era}"
+                    _, part = hadoop_fs(
+                        self.spark, f"{out_base.rstrip('/')}/{name}/era_number={era}"
                     )
                     if fs.exists(part):
                         fs.delete(part, True)
@@ -281,11 +274,8 @@ class EraStateStore:
         n = df.count()
         tmp = self.path.rstrip("/") + ".__compact__"
         df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        src = jvm.org.apache.hadoop.fs.Path(tmp)
-        dst = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = dst.getFileSystem(conf)
+        fs, dst = hadoop_fs(self.spark, self.path)
+        _, src = hadoop_fs(self.spark, tmp)
         fs.delete(dst, True)
         fs.rename(src, dst)
         return int(n)
@@ -295,9 +285,9 @@ class EraStateStore:
     def plan_pending(self, inventory: DataFrame, network: str, force: bool = False) -> DataFrame:
         """D1: available eras minus completed ones (left anti join).
 
-        `inventory` is sources.era.era_file_inventory output.  The completed
-        side is a per-network metadata set — broadcast, no shuffle of the
-        inventory."""
+        `inventory` is the (era_number, path, network) frame run_incremental
+        builds from discover_auto's listing.  The completed side is a
+        per-network metadata set — broadcast, no shuffle of the inventory."""
         inv = inventory.filter(F.col("network") == network)
         if force:
             return inv

@@ -97,7 +97,7 @@ def process_eras_batch(
     from pyspark.sql import functions as F
 
     from era_parser_spark.operators.normalize import TABLE_BUILDERS
-    from era_parser_spark.sinks.writers import write_parquet
+    from era_parser_spark.sinks.writers import staged_parquet, write_parquet
 
     spark = store.spark
     eras = [e for e, _ in todo]
@@ -111,47 +111,36 @@ def process_eras_batch(
             for era in eras
         ]
     )
-    staging = f"{out_base}/_staging_blocks"
     try:
-        # Materialize the decoded blocks ONCE to a staging parquet instead
-        # of cache(): the 15 table builds then run as column-PRUNED
-        # columnar scans with bounded memory.  A cached decoded-blocks DF
-        # must hold (or spill fragment-by-fragment) the whole batch in the
-        # block manager while every table build fights it for execution
-        # memory — at 512 eras x 4096 blocks on a 16g local JVM that GC-
-        # death-spiraled (found by tools/rehearsal.py); on a real cluster
-        # it caps batch size by aggregate executor memory for no reason.
-        # Parse cost stays one pass either way; the staging write is the
-        # same volume the cache would have spilled, and each table build
-        # reads only its own columns back.
-        read_era_blocks(
-            spark, [p for _, p in todo], network=network, tables=tables
-        ).write.mode("overwrite").parquet(staging)
-        blocks = spark.read.parquet(staging)
-        names = tables or list(TABLE_BUILDERS)
-        counts: dict[int, dict[str, int]] = {e: {} for e in eras}
-        for name in names:
-            df = TABLE_BUILDERS[name](blocks)
-            # era_number rides along from the source via slot -> era math
-            era_df = df.withColumn("era_number", F.expr("slot div 8192"))
-            era_counts = {
-                r.era_number: r.cnt
-                for r in era_df.groupBy("era_number")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-            # empty datasets are skipped (the reference skips them too, A13);
-            # an all-empty write would also leave no readable schema
-            if sum(era_counts.values()) > 0:
-                write_parquet(
-                    era_df,
-                    f"{out_base}/{name}",
-                    partition_by_month=False,
-                    partition_by_era=True,
-                    mode="overwrite",
-                )
-            for era in eras:
-                counts[era][name] = int(era_counts.get(era, 0))
+        # the decoded blocks are staged to parquet once, not cached: the
+        # table builds below read them back column-pruned
+        with staged_parquet(
+            read_era_blocks(spark, [p for _, p in todo], network=network, tables=tables),
+            f"{out_base}/_staging_blocks",
+        ) as blocks:
+            counts: dict[int, dict[str, int]] = {e: {} for e in eras}
+            for name in tables or list(TABLE_BUILDERS):
+                df = TABLE_BUILDERS[name](blocks)
+                # era_number rides along from the source via slot -> era math
+                era_df = df.withColumn("era_number", F.expr("slot div 8192"))
+                era_counts = {
+                    r.era_number: r.cnt
+                    for r in era_df.groupBy("era_number")
+                    .agg(F.count(F.lit(1)).alias("cnt"))
+                    .collect()
+                }
+                # empty datasets are skipped (the reference skips them too,
+                # A13); an all-empty write would also leave no readable schema
+                if sum(era_counts.values()) > 0:
+                    write_parquet(
+                        era_df,
+                        f"{out_base}/{name}",
+                        partition_by_month=False,
+                        partition_by_era=True,
+                        mode="overwrite",
+                    )
+                for era in eras:
+                    counts[era][name] = int(era_counts.get(era, 0))
         store.record_many(
             [
                 {"network": network, "era_number": era, "status": "completed",
@@ -172,15 +161,6 @@ def process_eras_batch(
             ]
         )
         raise
-    finally:
-        # staging is batch-scoped scratch; on failure the next run rewrites
-        # it anyway, so best-effort delete either way
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(staging)
-            p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
-        except Exception:  # noqa: BLE001 - cleanup must never mask the result
-            pass
 
 
 # --- Structured Streaming over normalized tables -----------------------------

@@ -28,6 +28,23 @@ def test_parse_separate(era_dir, tmp_path, capsys):
     assert "attestations" in payload["written"]
 
 
+def test_parse_stages_instead_of_caching(spark, era_dir, tmp_path, capsys):
+    """parse reads the decoded blocks back from a staging parquet it then
+    deletes — no cache(): no RDD is left persisted, no staging dir left."""
+    import os
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    out = str(tmp_path / "staged")
+    assert main(["parse", era_dir, "all-blocks", out]) == 0
+    payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert payload["written"]["blocks"] == 18
+    assert persisted() <= before
+    assert not os.path.exists(os.path.join(out, "_staging_blocks"))
+
+
 def test_parse_single_table_csv(era_dir, tmp_path, capsys):
     out = str(tmp_path / "wd")
     assert main(["parse", era_dir, "withdrawals", out, "--format", "csv"]) == 0
@@ -219,8 +236,7 @@ def test_slice_era_roundtrip(era_dir, tmp_path, capsys):
     """slice: extracted range re-parses identically and passes validation."""
     from era_parser_spark.parsing.e2store import era_stats
     from era_parser_spark.parsing.beacon import parse_block
-    from era_parser_spark.parsing import snappy as _snappy
-    from era_parser_spark.parsing.e2store import iter_block_payloads
+    from era_parser_spark.parsing.e2store import iter_blocks
 
     src = f"{era_dir}/{era_filename('gnosis', 1300)}"
     lo = 1300 * 8192 + 2
@@ -233,10 +249,9 @@ def test_slice_era_roundtrip(era_dir, tmp_path, capsys):
     assert stats["block_count"] == 5
     assert stats["min_slot"] == lo and stats["max_slot"] == lo + 4
     # block content survives the re-encode byte-exactly
-    orig = {s: _snappy.decompress(c) for s, c in
-            iter_block_payloads(open(src, "rb").read(), slot_range=(lo, lo + 4))}
-    got = {s: _snappy.decompress(c) for s, c in
-           iter_block_payloads(open(out, "rb").read())}
+    orig = {s: raw for s, _, raw in
+            iter_blocks(open(src, "rb").read(), slot_range=(lo, lo + 4))}
+    got = {s: raw for s, _, raw in iter_blocks(open(out, "rb").read())}
     assert got == orig
     assert main(["validate", out, "--glob", "*.era"]) == 0
 

@@ -27,7 +27,7 @@ from era_parser_spark.parsing.beacon import (
     peek_slot,
     stringify,
 )
-from era_parser_spark.parsing.e2store import era_stats, iter_block_payloads, write_era
+from era_parser_spark.parsing.e2store import era_stats, iter_blocks, write_era
 from era_parser_spark.testing.era_gen import make_block_doc
 
 FIXTURE_DIR = "/root/reference/tests/test_data"
@@ -135,9 +135,10 @@ def test_e2store_roundtrip_and_stats():
     docs = [make_block_doc(s, "gnosis") for s in (300, 301, 303)]
     payloads = [encode_signed_block(d, "phase0") for d in docs]
     era = write_era(payloads, state=b"state-bytes")
-    got = list(iter_block_payloads(era))
-    assert [s for s, _ in got] == [300, 301, 303]
-    assert [snappy.decompress(p) for _, p in got] == payloads
+    got = list(iter_blocks(era))
+    assert [s for s, _, _ in got] == [300, 301, 303]
+    assert [raw for _, _, raw in got] == payloads
+    assert [c for _, c, _ in got] == [len(snappy.frame_compress(p)) for p in payloads]
     stats = era_stats(era)
     assert stats["block_count"] == 3
     assert stats["min_slot"] == 300 and stats["max_slot"] == 303
@@ -145,7 +146,8 @@ def test_e2store_roundtrip_and_stats():
 
 
 def test_slot_index_pushdown_skips_decompression(monkeypatch):
-    """slot_range over a real index must not snappy-decompress non-matches."""
+    """slot_range over a real index decompresses exactly the matching
+    record and never a non-match."""
     from era_parser_spark.parsing import e2store
 
     docs = [make_block_doc(s, "gnosis") for s in (300, 301, 303)]
@@ -158,17 +160,90 @@ def test_slot_index_pushdown_skips_decompression(monkeypatch):
 
     calls = []
     real = snappy.decompress
-    monkeypatch.setattr(e2store.snappy, "decompress", lambda b: calls.append(1) or real(b))
-    got = list(iter_block_payloads(era, slot_range=(301, 301)))
-    assert calls == []  # slot came from the index, nothing decompressed
-    assert [s for s, _ in got] == [301]
-    assert real(got[0][1]) == payloads[1]
+    monkeypatch.setattr(e2store.snappy, "decompress", lambda b: calls.append(b) or real(b))
+    got = list(iter_blocks(era, slot_range=(301, 301)))
+    # slot came from the index: only the matching record was decompressed
+    assert [real(b) for b in calls] == [payloads[1]]
+    assert [s for s, _, _ in got] == [301]
+    assert got[0][2] == payloads[1]
 
     # A file without a readable index falls back to scan-and-filter.
     truncated = era[: len(era) - (8 + 16 + 8 * 4)]  # strip the i2 record
     assert e2store.find_block_index(truncated) is None
-    got_fb = list(iter_block_payloads(truncated, slot_range=(301, 303)))
-    assert [s for s, _ in got_fb] == [301, 303]
+    got_fb = list(iter_blocks(truncated, slot_range=(301, 303)))
+    assert [s for s, _, _ in got_fb] == [301, 303]
+
+
+def _indexless_era(slots, bad_slot=None) -> bytes:
+    """version + one block record per slot, no SlotIndex; the record for
+    `bad_slot` carries bytes that are not a snappy frame."""
+    from era_parser_spark.parsing import e2store
+
+    out = e2store._record(e2store.TYPE_VERSION, b"")
+    for s in slots:
+        payload = (
+            b"\xff" * 40 if s == bad_slot
+            else snappy.frame_compress(encode_signed_block(make_block_doc(s, "gnosis"), "phase0"))
+        )
+        out += e2store._record(e2store.TYPE_COMPRESSED_BLOCK, payload)
+    return out
+
+
+def _kernel_slots(tmp_path, data: bytes, **kw) -> list[int]:
+    """Run the Spark scan kernel in-process over one era file (paths-only
+    source shape) and return the slots it emitted."""
+    import pyarrow as pa
+
+    from era_parser_spark.sources.era import _parser
+
+    path = tmp_path / "gnosis-00000-deadbeef.era"
+    path.write_bytes(data)
+    src = pa.RecordBatch.from_pydict({"path": [str(path)]})
+    return [
+        s for rb in _parser("gnosis", None, **kw)(iter([src]))
+        for s in rb.column("slot").to_pylist()
+    ]
+
+
+def test_indexless_slot_range_skips_only_the_bad_record(tmp_path):
+    """One undecodable record in a file without a block index must cost
+    only that record on a slot_range scan — not every later block."""
+    data = _indexless_era([300, 301, 302, 303], bad_slot=301)
+    assert _kernel_slots(tmp_path, data, slot_range=(300, 303)) == [300, 302, 303]
+    assert _kernel_slots(tmp_path, data) == [300, 302, 303]
+    with pytest.raises(Exception):
+        _kernel_slots(tmp_path, data, slot_range=(300, 303), on_error="fail")
+
+
+def test_scan_decompresses_each_block_record_once(tmp_path, monkeypatch):
+    """The scan kernel snappy-decompresses every block record exactly once,
+    on a full scan and on a slot_range scan of a file with no index."""
+    data = _indexless_era([300, 301, 302, 303])
+    calls = []
+    real = snappy.decompress
+    monkeypatch.setattr(snappy, "decompress", lambda b: calls.append(1) or real(b))
+    assert _kernel_slots(tmp_path, data) == [300, 301, 302, 303]
+    assert len(calls) == 4
+    calls.clear()
+    assert _kernel_slots(tmp_path, data, slot_range=(301, 302)) == [301, 302]
+    assert len(calls) == 4
+
+
+def test_iter_blocks_on_bad_policy():
+    """on_bad=None raises; a callback sees each bad record and iteration
+    continues; a truncated record stream reports once and ends the file."""
+    data = _indexless_era([300, 301, 302], bad_slot=301)
+    with pytest.raises(Exception):
+        list(iter_blocks(data))
+    bad = []
+    assert [s for s, _, _ in iter_blocks(data, on_bad=bad.append)] == [300, 302]
+    assert len(bad) == 1
+
+    good = _indexless_era([300, 301, 302])
+    bad.clear()
+    got = [s for s, _, _ in iter_blocks(good[:-10], on_bad=bad.append)]
+    assert got == [300, 301]
+    assert len(bad) == 1 and "truncated" in str(bad[0])
 
 
 def test_slot_index_spec_byte_fixture():

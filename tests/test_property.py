@@ -10,7 +10,7 @@ from hypothesis import strategies as st
 
 from era_parser_spark.parsing import snappy
 from era_parser_spark.parsing.beacon import decode_signed_block, encode_signed_block
-from era_parser_spark.parsing.e2store import iter_block_payloads, write_era
+from era_parser_spark.parsing.e2store import iter_blocks, write_era
 from era_parser_spark.parsing.ssz import Bitlist, ByteList, ByteVector, Container, List, Uint
 from era_parser_spark.testing.era_gen import make_block_doc
 
@@ -108,8 +108,7 @@ def test_era_container_roundtrip(slots):
         encode_signed_block(d, fork_at_slot(s, "gnosis")) for s, d in sorted(docs.items())
     ]
     era = write_era(payloads)
-    got = list(iter_block_payloads(era))
-    assert [s for s, _ in got] == sorted(docs)
-    for s, compressed in got:
-        raw = snappy.decompress(compressed)
+    got = list(iter_blocks(era))
+    assert [s for s, _, _ in got] == sorted(docs)
+    for s, _, raw in got:
         assert decode_signed_block(raw, fork_at_slot(s, "gnosis")) == docs[s]

@@ -2321,7 +2321,7 @@ def test_st13_stream_serves_batch_model_exactly(spark):
     batch = kmeans_lloyd(
         emb, "vec_id", "embedding", k=8, iters=2, quant=1_000_000, dim=64
     )
-    batch_rows = {
+    batch_counts = {
         (r.window_start, r.cluster): r.cnt
         for r in batch.groupBy(
             F.window(
@@ -2333,7 +2333,7 @@ def test_st13_stream_serves_batch_model_exactly(spark):
         .select(F.col("w.start").alias("window_start"), "cluster", "cnt")
         .collect()
     }
-    assert stream_rows == batch_rows and len(stream_rows) > 0
+    assert stream_rows == batch_counts and len(stream_rows) > 0
 
 
 def test_kmeans_model_is_partitioning_invariant(spark):
